@@ -992,12 +992,17 @@ def q_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nd = (
         li.filter(F.col("l_partkey").isNotNull())
-        .select("l_returnflag", "l_partkey")
+        .select(F.col("l_returnflag").alias("_nd_flag"), "l_partkey")
         .distinct()
-        .groupBy("l_returnflag")
-        .agg(F.count("*").alias("n_parts"))
+        .groupBy("_nd_flag")
+        .agg(F.count("*").alias("_nd_n"))
     )
-    agg = sk.join(nd, "l_returnflag")
+    # left + null-safe: a NULL-flag group, and a group whose partkeys are
+    # all NULL (absent from nd), are real groups with n_parts 0 — a plain
+    # join on l_returnflag would drop both
+    agg = sk.join(nd, sk["l_returnflag"].eqNullSafe(nd["_nd_flag"]), "left").withColumn(
+        "n_parts", F.coalesce(F.col("_nd_n"), F.lit(0).cast("bigint"))
+    )
     return agg.select(
         "l_returnflag",
         "n_parts",

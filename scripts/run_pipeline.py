@@ -36,9 +36,8 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from tab2neo_spark.datagen import synthetic_pages
-    from tab2neo_spark.kg.construct import collect_metadata, construct_kg
+    from tab2neo_spark.kg.construct import construct_kg
     from tab2neo_spark.kg.materialize import GraphStore, materialize_kg
-    from tab2neo_spark.model.gazetteer import gazetteer_df, same_as_df
 
     if args.synthetic:
         pages = synthetic_pages(spark, args.synthetic)
@@ -50,8 +49,7 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("one of --pages / --synthetic is required")
 
     t0 = time.time()
-    meta = collect_metadata(gazetteer_df(spark), same_as_df(spark))
-    kg = construct_kg(spark, pages, unique_urls=unique, metadata=meta)
+    kg = construct_kg(spark, pages, unique_urls=unique)
     store = GraphStore(spark, args.store)
     results = materialize_kg(store, kg, run_id=args.run_id)
     kg.unpersist()

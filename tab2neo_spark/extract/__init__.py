@@ -8,5 +8,6 @@ from tab2neo_spark.extract.mentions import (  # noqa: F401
     detect_mentions,
     detect_mentions_with_pos,
     gazetteer_pattern,
+    match_gazetteer,
     tokenize_words,
 )

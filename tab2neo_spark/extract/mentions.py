@@ -5,18 +5,21 @@ The analog of the reference's ``extract_class_entities`` part 2
 mapped value columns into candidate entity rows.  Over webtext the "mapped
 column" is the token stream of the text, and the mapping is the gazetteer.
 
-Two execution strategies, picked automatically:
+Two execution strategies:
 
-- **alternation fast path** (default when every surface form is a plain
-  token): one JVM ``regexp_extract_all`` with the whole gazetteer compiled
-  into an alternation pattern, exploding ONLY the hits (~10-30× fewer rows
+- **alternation match** (:func:`match_gazetteer`, used by
+  :func:`detect_mentions`, KG construction and entity linking): one JVM
+  ``regexp_extract_all`` with the whole gazetteer compiled into an
+  alternation pattern, exploding ONLY the hits (~10-30× fewer rows
   than exploding every token), then a broadcast join to attach
   class/term_code.  Measured to scale at ~0.88 efficiency 4->16 cores vs
   ~0.5 for the token-explosion path — at 100 TB this is the difference
   between shuffling hit rows and shuffling every word on the web.
-- **token-join path** (``detect_mentions_with_pos`` / surfaces with
-  non-token characters): lower-case split + ``posexplode`` + broadcast
-  hash join; keeps in-document positions.
+  Surfaces must fit the token model (lowercase a-z0-9 tokens separated
+  by single spaces); anything else raises ``NotImplementedError``.
+- **token-join path** (:func:`detect_mentions_with_pos`, called
+  explicitly): lower-case split + ``posexplode`` + broadcast hash join;
+  keeps in-document positions, matches single-token surfaces only.
 
 Both are pure JVM column expressions + a broadcast join; no Python.
 """
@@ -67,6 +70,33 @@ def normalize_match(col):
     return F.regexp_replace(col, TOKEN_SPLIT_RE, " ")
 
 
+def match_gazetteer(text, surfaces: list[str]):
+    """Array column of the gazetteer hits in ``text`` (a Column), in
+    document order with repeats, each in its canonical single-space
+    surface form. An empty ``surfaces`` gives an empty array.
+
+    Raises ``NotImplementedError`` for surfaces outside the token model:
+    the text is lower-cased and split on non-[a-z0-9] runs, so such a
+    surface could never match — a silent wrong answer is worse than an
+    explicit gap."""
+    if not surfaces:
+        return F.array().cast("array<string>")
+    bad = [s for s in surfaces if not _PLAIN_TOKEN.match(s)]
+    if bad:
+        raise NotImplementedError(
+            f"gazetteer surfaces outside the token model: {bad[:5]} — "
+            "lowercase a-z0-9 tokens separated by single spaces are supported"
+        )
+    hits = F.regexp_extract_all(F.lower(text), F.lit(gazetteer_pattern(surfaces)), 1)
+    # single-token surfaces can only match runs of [a-z0-9] — the
+    # separator-collapsing normalization is an identity there, and at
+    # ~40 hits/doc the per-hit regexp_replace is a measurable term
+    # (~0.5 s over 2M hits at sf1.0). Multi-word gazetteers keep it.
+    if any(" " in s for s in surfaces):
+        hits = F.transform(hits, normalize_match)
+    return hits
+
+
 def detect_mentions(
     pages: DataFrame,
     gazetteer: DataFrame,
@@ -78,37 +108,12 @@ def detect_mentions(
 
     The gazetteer is metadata-scale by contract (it is collected to build
     the pattern and broadcast for the attribute join); pass ``surfaces``
-    pre-collected to avoid the collect job in per-batch paths. Falls back
-    to the positional token-join path if any surface is not a plain token.
+    pre-collected to avoid the collect job in per-batch paths.
     """
     if surfaces is None:
         surfaces = [r["surface"] for r in gazetteer.select("surface").distinct().collect()]
-    if not surfaces:
-        return pages.sparkSession.createDataFrame(
-            [], f"{id_col} string, class string, surface string, term_code string"
-        )
-    bad = [s for s in surfaces if not _PLAIN_TOKEN.match(s)]
-    if bad:
-        # a silent wrong answer (token-join can never match multi-word or
-        # non-ascii surfaces) is worse than an explicit gap
-        raise NotImplementedError(
-            f"gazetteer surfaces outside the token model: {bad[:5]} — "
-            "lowercase a-z0-9 tokens separated by single spaces are supported"
-        )
-
-    pat = gazetteer_pattern(surfaces)
-    # single-token surfaces can only match runs of [a-z0-9] — the
-    # separator-collapsing normalization is an identity there, and at
-    # ~40 hits/doc the per-hit regexp_replace is a measurable term (r6:
-    # ~0.5 s over 2M hits at sf1.0). Multi-word gazetteers keep it.
-    needs_norm = any(" " in s for s in surfaces)
-    raw = F.explode(
-        F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(pat), 1)
-    ).alias("raw_match")
-    hits = pages.select(id_col, raw).select(
-        id_col,
-        (normalize_match(F.col("raw_match")) if needs_norm
-         else F.col("raw_match")).alias("surface"),
+    hits = pages.select(
+        id_col, F.explode(match_gazetteer(F.col(text_col), surfaces)).alias("surface")
     )
     return hits.join(F.broadcast(gazetteer), "surface", "inner").select(
         id_col, "class", "surface", "term_code"

@@ -137,12 +137,13 @@ def components_adaptive(
     dst: str = "dst",
     driver_threshold: int = 100_000,
 ) -> DataFrame:
-    """``(id, component)`` with the same size-adaptive strategy as
-    :func:`canonical_map`, but type-preserving (works for long doc ids as
-    well as string surfaces): below ``driver_threshold`` edges the
-    union-find runs on the driver in ONE job — a multi-round iterative
-    shuffle's fixed overhead dominates at metadata scale — while larger
-    graphs go through the distributed hash-min + pointer-jumping loop."""
+    """``(id, component)``, distribution strategy following data size
+    like the reference's driver-side metadata planning (SURVEY §2.11);
+    type-preserving (works for long doc ids as well as string surfaces):
+    below ``driver_threshold`` edges the union-find runs on the driver in
+    ONE job — a multi-round iterative shuffle's fixed overhead dominates
+    at metadata scale — while larger graphs go through the distributed
+    hash-min + pointer-jumping loop."""
     from pyspark.storagelevel import StorageLevel
 
     spark = edges.sparkSession
@@ -170,33 +171,7 @@ def canonical_map(
     same_as: DataFrame, a: str = "a", b: str = "b", driver_threshold: int = 100_000
 ) -> DataFrame:
     """``(surface, canonical)`` for every surface in the SAME_AS graph,
-    including identity rows for the representatives themselves.
-
-    Distribution strategy follows data size, like the reference's
-    driver-side metadata planning (SURVEY §2.11): alias graphs at
-    metadata scale (< ``driver_threshold`` edges) are collected and
-    union-found on the driver — one job instead of a multi-round
-    iterative shuffle whose fixed overhead would dominate; larger graphs
-    go through the distributed hash-min loop."""
-    spark = same_as.sparkSession
-    n = same_as.limit(driver_threshold + 1).count()
-    if n <= driver_threshold:
-        pairs = [(r[a], r[b]) for r in same_as.collect()]
-        mapping = sorted(_union_find_driver(pairs).items())
-        return spark.createDataFrame(mapping, "surface string, canonical string")
-    comp = connected_components(same_as, src=a, dst=b)
+    including identity rows for the representatives themselves — the
+    size-adaptive :func:`components_adaptive` under alias names."""
+    comp = components_adaptive(same_as, src=a, dst=b, driver_threshold=driver_threshold)
     return comp.select(F.col("id").alias("surface"), F.col("component").alias("canonical"))
-
-
-def apply_canonical(
-    df: DataFrame, mapping: DataFrame, col: str, out_col: str | None = None
-) -> DataFrame:
-    """Rewrite ``col`` through the canonical map (broadcast — the map is
-    metadata-scale); unmapped values canonicalize to themselves."""
-    out_col = out_col or col
-    m = F.broadcast(mapping.withColumnRenamed("surface", "__s").withColumnRenamed("canonical", "__c"))
-    return (
-        df.join(m, df[col] == m["__s"], "left")
-        .withColumn(out_col, F.coalesce(F.col("__c"), F.col(col)))
-        .drop("__s", "__c")
-    )

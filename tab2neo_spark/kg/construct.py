@@ -6,19 +6,20 @@ refactor_all`` (model_appliers/model_applier.py:96-135) become one lazy
 DataFrame DAG:
 
   pages ──extract_text (Arrow UDF, narrow)──> text
-        ──regexp_extract_all(gazetteer alternation) (JVM, narrow)──> hits
-        ──⋈ broadcast(gazetteer)──> mentions          (R2: extract_class_entities)
-        ──canonicalize via CC(SAME_AS)──> canonical mentions (MERGE replacement)
+        ──match_gazetteer (alternation regex, JVM, narrow)──> hits
+                                                      (R2: extract_class_entities)
+        ──literal map surface -> class + CC(SAME_AS) canonical──> mention keys
+                                                      (MERGE replacement)
         ──distinct──> entity nodes (deterministic xxhash64 ids)
         ──groupBy(url, entity)──> MENTIONS edges      (R3: link_classes on shared row)
         ──union──> triples(subj, pred, obj)
 
 Where the reference loops per-entity-class on the driver and ships one
 Cypher query per class (its chief scalability limit, SURVEY §3.3), here
-every class is matched in ONE broadcast join and Catalyst fuses the whole
-read->extract->tokenize->match path into a single map-only stage; the only
-shuffles are the final distinct/groupBy on (url, entity), which AQE
-skew-splits for head entities.
+every class is matched in ONE regex + literal-map lookup and Catalyst
+fuses the whole read->extract->match path into a single map-only stage;
+the only shuffles are the final distinct/groupBy on (url, entity), which
+AQE skew-splits for head entities.
 """
 
 from __future__ import annotations
@@ -30,8 +31,8 @@ from pyspark.sql import functions as F
 
 from tab2neo_spark import schema as S
 from tab2neo_spark.extract.html import extract_text_udf
-from tab2neo_spark.extract.mentions import detect_mentions
-from tab2neo_spark.kg.canon import apply_canonical, canonical_map
+from tab2neo_spark.extract.mentions import match_gazetteer
+from tab2neo_spark.kg.canon import canonical_map
 from tab2neo_spark.model.gazetteer import gazetteer_df, same_as_df
 
 MENTIONS = "MENTIONS"
@@ -42,18 +43,17 @@ SAME_AS_PRED = "SAME_AS"
 class KGResult:
     """Lazy handle over the construction DAG.
 
-    Output DataFrames (``nodes``/``edges``/``triples``/``mentions``) are
+    Output DataFrames (``nodes``/``edges``/``triples``) are
     built on first attribute access: plan construction costs real driver
     time (py4j + analysis), and it is the per-batch SERIAL term in the
     scaling law — a caller that only materializes ``triples`` must not pay
     for the plans of the other outputs."""
 
-    def __init__(self, pages, mention_pairs, mentions_thunk, nodes_thunk,
-                 edges_thunk, triples_thunk, persisted=None):
+    def __init__(self, pages, mention_pairs, nodes_thunk, edges_thunk,
+                 triples_thunk, persisted):
         self.pages = pages
         self.mention_pairs = mention_pairs  # distinct (url, class, canonical)
         self._thunks = {
-            "mentions": mentions_thunk,   # (url, class, surface, canonical, term_code)
             "nodes": nodes_thunk,         # NODES_SCHEMA
             "edges": edges_thunk,         # EDGES_SCHEMA
             "triples": triples_thunk,     # TRIPLES_SCHEMA
@@ -71,8 +71,7 @@ class KGResult:
         raise AttributeError(name)
 
     def unpersist(self) -> None:
-        if self._persisted is not None:
-            self._persisted.unpersist()
+        self._persisted.unpersist()
 
 
 @dataclass
@@ -115,31 +114,23 @@ def default_metadata() -> KGMetadata:
     )
 
 
-def _page_keys_narrow(pages: DataFrame, meta: KGMetadata) -> DataFrame | None:
+def _page_keys_narrow(pages: DataFrame, meta: KGMetadata) -> DataFrame:
     """Per-page deduped mention keys ``(url, cks: array<string>)`` with no
-    shuffle, or None if the gazetteer needs the generic join path.
+    shuffle.
 
     The gazetteer and canonical map are metadata-scale: both are collected
     and compiled into ONE literal map surface -> 'class<SEP>canonical'
     applied inside a per-row array pipeline:
 
-        regexp_extract_all -> array_distinct -> transform(map lookup)
+        match_gazetteer -> array_distinct -> transform(map lookup)
         -> array_distinct
 
     Per-page dedup inside the array IS global dedup when urls are unique.
     Keeping the relation page-granular (1 row/page, small array) makes it
     the cheapest thing to persist — ~10-30x fewer rows than the exploded
-    pairs."""
-    from tab2neo_spark.extract.mentions import (
-        _PLAIN_TOKEN,
-        gazetteer_pattern,
-        normalize_match,
-    )
-
+    pairs. An empty gazetteer yields an empty key array on every page."""
     sep = "\x01"
     surfaces = sorted({s for _, s, _ in meta.gaz_rows})
-    if not surfaces or not all(_PLAIN_TOKEN.match(s) for s in surfaces):
-        return None
 
     lookup = {}
     for cls, surface, _ in meta.gaz_rows:
@@ -147,22 +138,12 @@ def _page_keys_narrow(pages: DataFrame, meta: KGMetadata) -> DataFrame | None:
     map_args = []
     for k, v in sorted(lookup.items()):
         map_args += [F.lit(k), F.lit(v)]
-    surface_map = F.create_map(*map_args)
+    # the cast types the empty map of an empty gazetteer; Catalyst drops
+    # it as a no-op otherwise
+    surface_map = F.create_map(*map_args).cast("map<string,string>")
 
-    pat = gazetteer_pattern(surfaces)
-    hits = F.array_distinct(F.regexp_extract_all(F.lower(F.col("text")), F.lit(pat), 1))
-    # matches of multi-word surfaces may carry arbitrary separators —
-    # normalize to the canonical single-space surface before lookup;
-    # single-token surfaces can only match [a-z0-9] runs, so the
-    # normalization is an identity and the per-hit regexp_replace is
-    # skipped (r6)
-    needs_norm = any(" " in s for s in surfaces)
-    keys = F.array_distinct(
-        F.transform(
-            hits,
-            lambda w: surface_map[normalize_match(w) if needs_norm else w],
-        )
-    )
+    hits = F.array_distinct(match_gazetteer(F.col("text"), surfaces))
+    keys = F.array_distinct(F.transform(hits, lambda w: surface_map[w]))
     return pages.select("url", keys.alias("cks"))
 
 
@@ -179,24 +160,18 @@ def construct_kg(
     pages: DataFrame,
     gazetteer: DataFrame | None = None,
     same_as: DataFrame | None = None,
-    use_existing_text: bool = False,
-    persist_intermediate: bool = True,
     unique_urls: bool = False,
     metadata: KGMetadata | None = None,
 ) -> KGResult:
     """Run the full construction DAG (lazy — nothing executes until the
-    caller materializes).
+    caller materializes). Text is extracted from the ``html`` bytes.
 
-    ``use_existing_text=False`` (default) extracts text from html bytes —
-    the real pipeline; True trusts the ``text`` column (for isolating
-    downstream stages in tests).
-
-    ``persist_intermediate`` persists the distinct (url, class, canonical)
-    mention pairs: every output (nodes/edges/triples) derives from that
-    small relation, and without persistence Spark would re-run the
-    expensive scan->extract->match subtree once per output branch (it does
-    not share subtrees across a union). At petabyte scale this persist
-    becomes a checkpoint table write — same shape.
+    The per-page mention keys are persisted: every output (nodes/edges/
+    triples) derives from that small relation, and without persistence
+    Spark would re-run the expensive scan->extract->match subtree once per
+    output branch (it does not share subtrees across a union). At
+    petabyte scale this persist becomes a checkpoint table write — same
+    shape. ``KGResult.unpersist`` releases it.
 
     ``unique_urls=True`` declares the input contract 'one row per url'
     (the BASELINE input_hint row identity). Because a page lives in exactly
@@ -208,6 +183,8 @@ def construct_kg(
     (``pages.dropDuplicates(['url'])``, 1 row/url) instead of paying a
     per-mention shuffle in every run.
     """
+    from pyspark.storagelevel import StorageLevel
+
     if metadata is None:
         if gazetteer is None and same_as is None:
             # default dictionaries: metadata straight from the literal
@@ -218,50 +195,17 @@ def construct_kg(
                 gazetteer if gazetteer is not None else gazetteer_df(spark),
                 same_as if same_as is not None else same_as_df(spark),
             )
-    # the gazetteer DataFrame is only needed by the inspection-grade
-    # mentions output — built lazily inside the thunk, not per call
-    gaz = gazetteer
 
-    if not use_existing_text:
-        pages = pages.withColumn("text", extract_text_udf(F.col("html")))
-
-    # canonicalization: CC over SAME_AS -> rewrite surfaces (MERGE analog);
-    # the canonical map is already inside metadata — the inspection-grade
-    # `mentions` output rebuilds a DF view of it on demand.
-    def mentions_thunk():
-        canon = spark.createDataFrame(
-            sorted(metadata.canon_lookup.items()) or [("", "")],
-            "surface string, canonical string",
-        )
-        raw = detect_mentions(
-            pages,
-            gaz if gaz is not None else gazetteer_df(spark),
-            text_col="text", id_col="url",
-            surfaces=sorted({s for _, s, _ in metadata.gaz_rows}),
-        )
-        return apply_canonical(raw, canon, col="surface", out_col="canonical")
+    pages = pages.withColumn("text", extract_text_udf(F.col("html")))
 
     # the load-bearing intermediate: everything downstream derives from it.
     # Persist at PAGE granularity (1 row/page + small key array): cheapest
     # relation that still spares every output branch the scan->extract->
     # match recompute.
-    from pyspark.storagelevel import StorageLevel
-
-    page_keys = _page_keys_narrow(pages, metadata)
-    persisted = None
-    if page_keys is not None:
-        if persist_intermediate:
-            page_keys = page_keys.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted = page_keys
-        mention_pairs_src = _explode_pairs(page_keys)
-        if not unique_urls:
-            mention_pairs_src = mention_pairs_src.distinct()
-    else:
-        # generic path: arbitrary (non-token) gazetteer surfaces
-        mention_pairs_src = mentions_thunk().select("url", "class", "canonical").distinct()
-        if persist_intermediate:
-            mention_pairs_src = mention_pairs_src.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted = mention_pairs_src
+    page_keys = _page_keys_narrow(pages, metadata).persist(StorageLevel.MEMORY_AND_DISK)
+    mention_pairs_src = _explode_pairs(page_keys)
+    if not unique_urls:
+        mention_pairs_src = mention_pairs_src.distinct()
 
     def nodes_thunk():
         # entity nodes: one per (class, canonical surface), deterministic id
@@ -325,9 +269,8 @@ def construct_kg(
     return KGResult(
         pages=pages,
         mention_pairs=mention_pairs_src,
-        mentions_thunk=mentions_thunk,
         nodes_thunk=nodes_thunk,
         edges_thunk=edges_thunk,
         triples_thunk=triples_thunk,
-        persisted=persisted,
+        persisted=page_keys,
     )

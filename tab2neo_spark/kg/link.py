@@ -136,7 +136,8 @@ def link_entities(
     ``candidate_map``: (surface, entity) — possibly many entities per
     surface (the ambiguity). Broadcast-joined against detected surfaces;
     page vectors derive from the text (Arrow UDF), entity vectors from the
-    entity key (broadcast).
+    entity key (broadcast). Surfaces are matched exactly as in KG
+    construction (:func:`~tab2neo_spark.extract.mentions.match_gazetteer`).
     Returns resolved links: (url, surface, entity, score).
     """
     surfaces = [r["surface"] for r in candidate_map.select("surface").distinct().collect()]
@@ -144,9 +145,10 @@ def link_entities(
     if not surfaces:
         return spark.createDataFrame([], f"{id_col} string, surface string, entity string, score double")
 
-    from tab2neo_spark.extract.mentions import gazetteer_pattern
+    from tab2neo_spark.extract.mentions import match_gazetteer
 
-    pat = gazetteer_pattern(surfaces)
+    # raises on surfaces outside the token model, as construct_kg does
+    matches = match_gazetteer(F.col(text_col), surfaces)
     # page vector computed ONCE per page, BEFORE the explode — a page with
     # 20 candidate surfaces must not hash its full text 20x; the explode
     # then duplicates a 16-double vector, not a UDF evaluation.
@@ -162,9 +164,7 @@ def link_entities(
     hits = pages_with_vec.select(
         id_col,
         "page_vec",
-        F.explode(
-            F.array_distinct(F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(pat), 1))
-        ).alias("surface"),
+        F.explode(F.array_distinct(matches)).alias("surface"),
     )
     cands = hits.join(F.broadcast(candidate_map), "surface", "inner").join(
         F.broadcast(entity_embeddings(spark, entities, dim)), "entity", "inner"

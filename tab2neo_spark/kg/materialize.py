@@ -11,9 +11,8 @@ Design:
 - **Tables**: ``nodes`` partitioned by ``class``, ``edges`` by
   ``rel_type``, ``triples`` by ``pred`` — partition pruning serves the
   readback layer's class/rel filters directly. Parquet in this sandbox;
-  on a real deployment the same writers target Iceberg (MERGE INTO,
-  snapshot rollback) — the jars aren't in this image, so the Iceberg
-  branch is gated behind an import/config try (see ``_iceberg_available``).
+  on a real deployment the same writers would target Iceberg (MERGE
+  INTO, snapshot rollback); no Iceberg branch exists here.
 - **Idempotency**: all ids are deterministic content hashes, so re-writing
   the same input produces byte-identical rows; dedup-on-write
   (anti-join against the existing table) replaces transactional MERGE.
@@ -29,19 +28,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        return "org.apache.iceberg.spark.SparkCatalog" in (
-            spark.conf.get("spark.sql.catalog.spark_catalog", "")
-        )
-    except Exception:
-        return False
 
 
 class GraphStore:
@@ -111,7 +102,6 @@ class GraphStore:
         stage: str,
         partition_by: list[str] | None = None,
         dedup_key: list[str] | None = None,
-        mode: str = "append",
     ) -> dict:
         """Write one stage's output with lineage; skip if already done.
 
@@ -147,7 +137,7 @@ class GraphStore:
         obs = Observation(f"{run_id}__{stage}")
         out = out.observe(obs, F.count(F.lit(1)).alias("row_count"))
 
-        writer = out.write.mode(mode)
+        writer = out.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
@@ -295,9 +285,6 @@ class GraphStore:
         writer.saveAsTable(name)
         return name
 
-    def read_bucketed(self, table: str) -> DataFrame:
-        return self.spark.table(self._catalog_name(table))
-
     # -- table metadata (partition layout survives rollback rewrites) ---------
 
     def _meta_file(self, table: str) -> str:
@@ -326,16 +313,7 @@ class GraphStore:
             if not os.path.isdir(path):
                 continue
             kept = self.spark.read.parquet(path).filter(F.col("run_id") != run_id)
-            tmp = path + "__rollback_tmp"
-            writer = kept.write.mode("overwrite")
-            # preserve the table's partition layout — a rewrite that drops
-            # partitioning would silently kill partition pruning for every
-            # subsequent readback
-            parts = self.table_partitioning(table)
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(tmp)
-            self._swap_dirs(tmp, path)
+            self._rewrite(table, kept, "__rollback_tmp")
         # only the checkpoints of the ROLLED-BACK tables flip status: a
         # partial rollback (subset of tables) must keep the other tables'
         # commits visible — time-travel reads (read(as_of_run=...)) derive
@@ -373,13 +351,7 @@ class GraphStore:
                     & F.coalesce(F.col("_action") == action_idx, F.lit(False))
                 )
             )
-            tmp = path + "__rollback_tmp"
-            writer = kept.write.mode("overwrite")
-            parts = self.table_partitioning(table)
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(tmp)
-            self._swap_dirs(tmp, path)
+            self._rewrite(table, kept, "__rollback_tmp")
         marker = f"__a{action_idx}_"
         for rec in self.checkpoints(run_id):
             if marker in rec["stage"]:
@@ -426,28 +398,7 @@ class GraphStore:
         else:
             n = max(1, -(-bytes_before // max(target_file_bytes, 1)))
             out = df.repartition(int(n))
-        tmp = path + "__compact_tmp"
-        writer = out.write.mode("overwrite")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(tmp)
-        # VERIFY the rewrite before the destructive swap (r5 ADVICE): a
-        # row-losing rewrite — or a concurrent append landing between the
-        # snapshot read and the swap (compaction assumes a single writer,
-        # like every GraphStore mutation) — must abort with the original
-        # directory intact, not be recorded as an unchecked number.
-        rows_tmp = sum(self._footer_histogram(self._parquet_files(tmp)).values())
-        if rows_tmp != rows_before:
-            import shutil
-
-            shutil.rmtree(tmp)
-            raise RuntimeError(
-                f"compact({table!r}): rewrite holds {rows_tmp} rows but the "
-                f"source held {rows_before} — aborting before the swap "
-                "(concurrent append, or a row-dropping read?); original "
-                "directory left untouched"
-            )
-        self._swap_dirs(tmp, path)
+        self._rewrite(table, out, "__compact_tmp", expect_rows=rows_before)
 
         after = self._parquet_files(path)
         payload = {
@@ -469,12 +420,38 @@ class GraphStore:
         self.write_checkpoint("__compact__", stage, payload)
         return payload
 
-    @staticmethod
-    def _swap_dirs(src: str, dst: str) -> None:
-        import shutil
+    def _rewrite(
+        self, table: str, df: DataFrame, tmp_suffix: str, expect_rows: int | None = None
+    ) -> None:
+        """Replace ``table`` with ``df``: write a temp dir beside it with the
+        table's recorded partitioning, then swap it in. Preserving the
+        layout matters — a rewrite that drops partitioning would silently
+        kill partition pruning for every subsequent readback.
 
-        shutil.rmtree(dst)
-        os.replace(src, dst)
+        ``expect_rows`` VERIFIES the rewrite before the destructive swap: a
+        row-losing rewrite — or a concurrent append landing between the
+        snapshot read and the swap (every GraphStore mutation assumes a
+        single writer) — must abort with the original directory intact,
+        not be recorded as an unchecked number."""
+        path = self.path(table)
+        tmp = path + tmp_suffix
+        writer = df.write.mode("overwrite")
+        parts = self.table_partitioning(table)
+        if parts:
+            writer = writer.partitionBy(*parts)
+        writer.parquet(tmp)
+        if expect_rows is not None:
+            rows_tmp = sum(self._footer_histogram(self._parquet_files(tmp)).values())
+            if rows_tmp != expect_rows:
+                shutil.rmtree(tmp)
+                raise RuntimeError(
+                    f"rewrite of {table!r} holds {rows_tmp} rows but the "
+                    f"source held {expect_rows} — aborting before the swap "
+                    "(concurrent append, or a row-dropping read?); original "
+                    "directory left untouched"
+                )
+        shutil.rmtree(path)
+        os.replace(tmp, path)
 
 
 def write_method_result(

@@ -39,20 +39,16 @@ def stream_kg_to_store(
     """Incremental KG construction: one construct_kg + materialize per
     micro-batch. Batch id becomes the run_id -> per-batch lineage rows;
     replays (failure recovery) dedup on the deterministic keys."""
-    from tab2neo_spark.kg.construct import collect_metadata, construct_kg
+    from tab2neo_spark.kg.construct import construct_kg, default_metadata
     from tab2neo_spark.kg.materialize import materialize_kg
-    from tab2neo_spark.model.gazetteer import gazetteer_df, same_as_df
 
-    meta = metadata or collect_metadata(gazetteer_df(spark), same_as_df(spark))
+    meta = metadata or default_metadata()
     stream = read_page_stream(spark, drop_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        kg = construct_kg(
-            spark, batch_df, unique_urls=False, metadata=meta,
-            persist_intermediate=True,
-        )
+        kg = construct_kg(spark, batch_df, unique_urls=False, metadata=meta)
         materialize_kg(store, kg, run_id=f"stream_batch_{batch_id}")
         kg.unpersist()
 

@@ -149,6 +149,28 @@ def test_unsupported_gazetteer_surface_raises(spark):
         detect_mentions(docs, gaz)
 
 
+def test_empty_gazetteer_yields_page_nodes_only(spark):
+    """An empty gazetteer runs the same page-keys path: every page still
+    becomes a Page node, and no page has a mention."""
+    import datetime
+
+    from tab2neo_spark.schema import PAGES_SCHEMA
+
+    gaz = spark.createDataFrame([], "class string, surface string, term_code string")
+    sa = spark.createDataFrame([], "a string, b string")
+    rows = [
+        ("u1", datetime.datetime(2024, 1, 1), b"<p>spark join</p>", None, "en"),
+        ("u2", datetime.datetime(2024, 1, 1), None, None, "en"),
+    ]
+    kg = construct_kg(spark, spark.createDataFrame(rows, PAGES_SCHEMA),
+                      gazetteer=gaz, same_as=sa, unique_urls=True)
+    nodes = {(r["class"], r["rdfs_label"]) for r in kg.nodes.collect()}
+    assert nodes == {("Page", "u1"), ("Page", "u2")}
+    assert kg.triples.count() == 0
+    assert kg.edges.count() == 0
+    kg.unpersist()
+
+
 def test_connected_components_long_chain(spark):
     """Pointer-jumping: a 300-node chain converges well inside 50 rounds
     (one-hop propagation alone would need 300)."""

@@ -82,6 +82,27 @@ def test_deterministic_across_runs(spark, pages_text, candidate_map):
     assert a == b
 
 
+def test_link_multiword_surface_matches_any_separator(spark):
+    """'new york' links text spelling it 'new-york' — the same match as KG
+    construction, which normalizes separators inside multi-word hits."""
+    pages = spark.createDataFrame(
+        [("u1", "moved to new-york"), ("u2", "newyork is not york")],
+        "url string, text string",
+    )
+    cand = spark.createDataFrame([("new york", "Place:nyc")], "surface string, entity string")
+    got = {(r["url"], r["surface"], r["entity"])
+           for r in link_entities(spark, pages, cand).collect()}
+    assert got == {("u1", "new york", "Place:nyc")}
+
+
+def test_link_rejects_surface_outside_token_model(spark, pages_text):
+    """Text is lower-cased before matching, so 'Spark' could never match:
+    rejected up front like construct_kg does."""
+    cand = spark.createDataFrame([("Spark", "Engine:spark")], "surface string, entity string")
+    with pytest.raises(NotImplementedError, match="token model"):
+        link_entities(spark, pages_text, cand)
+
+
 def test_hash_vec_unit_norm():
     v = _hash_vec("anything")
     assert abs(np.linalg.norm(v) - 1.0) < 1e-12

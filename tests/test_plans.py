@@ -71,7 +71,7 @@ def test_triple_path_has_no_shuffle_under_unique_urls(spark, sf_dir):
     from tab2neo_spark.kg.construct import construct_kg
 
     pages = pages_from_documents(spark, sf_dir).limit(50)
-    kg = construct_kg(spark, pages, unique_urls=True, persist_intermediate=False)
+    kg = construct_kg(spark, pages, unique_urls=True)
     mentions_triples = kg.triples.filter(F.col("pred") == "MENTIONS")
     plan = _plan(mentions_triples)
     assert "Exchange" not in plan, plan[:1200]

@@ -273,3 +273,43 @@ def test_minhash_verified_uses_array_intersect_not_shingle_join(spark, sf_dir):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "array_intersect" in plan, plan[:1500]
     assert "InMemoryTableScan" in plan, plan[:1500]
+
+
+# -- approx_stats keeps NULL-flag and all-NULL-partkey groups --------------
+
+
+def test_approx_stats_keeps_null_groups_like_oracle(spark, sf_dir, tmp_path, monkeypatch):
+    """A NULL l_returnflag group and a group whose l_partkey values are all
+    NULL are real groups (n_parts 2 and 0): the query must keep both,
+    equal to its DuckDB oracle."""
+    import duckdb
+
+    import __spark_entry__ as E
+
+    # oracle_sql() renders every oracle eagerly: point its data-derived
+    # VALUES at the small fixture and skip the corpus-scale dedup pass
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SKIP_CANON", "1")
+
+    pd.DataFrame({
+        "l_returnflag": ["A", "A", "A", "N", "N", "N", None, None, None],
+        "l_partkey": pd.array([1, 2, 2, None, None, None, 4, 5, None], dtype="Int64"),
+        "l_extendedprice": [10.0, 20.0, 30.0, 5.0, 6.0, 7.0, 1.0, 2.0, 3.0],
+    }).to_parquet(tmp_path / "lineitem.parquet")
+
+    got = sorted(
+        (tuple(r) for r in E.q_approx_stats(spark, str(tmp_path))
+         .select("l_returnflag", "n_parts", "distinct_ok", "median_ok").collect()),
+        key=repr,
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path / 'lineitem.parquet'}'")
+    want = sorted(
+        con.execute(
+            "SELECT l_returnflag, n_parts, distinct_ok, median_ok FROM ("
+            + E.oracle_sql()["approx_stats"] + ")"
+        ).fetchall(),
+        key=repr,
+    )
+    assert got == want
+    assert {r[0] for r in got} == {"A", "N", None}

@@ -24,8 +24,7 @@ def main() -> None:
     n_pages = int(sys.argv[2])
 
     from tab2neo_spark.datagen import synthetic_pages
-    from tab2neo_spark.kg.construct import collect_metadata, construct_kg
-    from tab2neo_spark.model.gazetteer import gazetteer_df, same_as_df
+    from tab2neo_spark.kg.construct import construct_kg, default_metadata
     from tab2neo_spark.session import get_spark
 
     spark = get_spark(app_name=f"kg_throughput_{cores}", cores=cores,
@@ -34,7 +33,7 @@ def main() -> None:
     # materialize the input once so generation cost isn't measured
     pages = pages.repartition(max(8, cores * 2)).cache()
     n = pages.count()
-    meta = collect_metadata(gazetteer_df(spark), same_as_df(spark))
+    meta = default_metadata()
 
     def run_once() -> tuple[int, float]:
         t0 = time.time()
