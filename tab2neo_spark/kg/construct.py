@@ -50,9 +50,12 @@ class KGResult:
     for the plans of the other outputs."""
 
     def __init__(self, pages, mention_pairs, nodes_thunk, edges_thunk,
-                 triples_thunk, persisted):
+                 triples_thunk, persisted, partitions):
         self.pages = pages
         self.mention_pairs = mention_pairs  # distinct (url, class, canonical)
+        # table -> the partition values its rows can hold, known from the
+        # metadata without a job (GraphStore.write_stage verifies them)
+        self.partitions = partitions
         self._thunks = {
             "nodes": nodes_thunk,         # NODES_SCHEMA
             "edges": edges_thunk,         # EDGES_SCHEMA
@@ -273,4 +276,9 @@ def construct_kg(
         edges_thunk=edges_thunk,
         triples_thunk=triples_thunk,
         persisted=page_keys,
+        partitions={
+            "nodes": sorted({"Page"} | {c for c, _, _ in metadata.gaz_rows}),
+            "edges": [MENTIONS],
+            "triples": [MENTIONS, IS_A],
+        },
     )

@@ -14,8 +14,10 @@ Design:
   on a real deployment the same writers would target Iceberg (MERGE
   INTO, snapshot rollback); no Iceberg branch exists here.
 - **Idempotency**: all ids are deterministic content hashes, so re-writing
-  the same input produces byte-identical rows; dedup-on-write
-  (anti-join against the existing table) replaces transactional MERGE.
+  the same input produces byte-identical rows; dedup-on-write replaces
+  transactional MERGE: a left-anti join against the existing keys of the
+  partitions the writer declares, verified on the write. A small upsert
+  runs two jobs: the existing-keys broadcast and the write.
 - **Lineage**: one checkpoint row per (run_id, stage) with row counts +
   per-partition row histogram; a stage found 'done' in the checkpoint
   table is skipped on resume — re-running a crashed job re-does only the
@@ -33,6 +35,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class GraphStore:
@@ -102,56 +105,93 @@ class GraphStore:
         stage: str,
         partition_by: list[str] | None = None,
         dedup_key: list[str] | None = None,
+        partitions: list | None = None,
     ) -> dict:
         """Write one stage's output with lineage; skip if already done.
 
         Returns the checkpoint payload. ``dedup_key`` turns the append into
         an idempotent keyed upsert (left-anti against existing keys — the
         MERGE INTO analog without Iceberg).
+
+        ``partitions`` declares the values of the (single) partition column
+        the batch holds — writers know them as literals (a class, a
+        rel_type). The upsert's existing-keys read is pruned to them, and
+        the write VERIFIES them: if a row landed in an undeclared
+        partition, the files this write added are deleted, no checkpoint
+        is written and ``ValueError`` names the values. A declaration may
+        over-approximate (values the batch does not hold cost only a
+        larger existing-keys scan).
         """
         if self.stage_done(run_id, stage):
             return self._read_ckpt(run_id, stage)
+        parts = partition_by or []
+        part = parts[0] if len(parts) == 1 else None
+        if partitions is not None and part is None:
+            raise ValueError(
+                f"declared partitions need exactly one partition column, got {parts}"
+            )
 
-        self._save_table_meta(table, partition_by or [])
         t0 = time.time()
         out = df.withColumn("run_id", F.lit(run_id))
         path = self.path(table)
+        existed = os.path.isdir(path)
         n_pruned: int | None = None
 
-        if dedup_key and os.path.isdir(path):
-            existing, n_pruned = self._existing_for_dedup(path, out, partition_by)
-            out = out.join(
-                existing.select(*dedup_key).distinct(), dedup_key, "left_anti"
+        if dedup_key and existed:
+            existing, n_pruned = self._existing_for_dedup(
+                path, out, dedup_key, parts, partitions
             )
+            out = out.join(existing, dedup_key, "left_anti")
 
-        # lineage WITHOUT a second pass: the row count rides on the write
-        # itself via df.observe (one job, one scan — a pre-write
-        # groupBy().count().collect() would execute the full stage DAG
-        # twice, doubling the most expensive jobs at scale), and the
-        # per-file histogram comes from the written parquet FOOTERS
-        # (metadata-only — Iceberg deployments read the same numbers from
-        # snapshot manifests)
+        # lineage WITHOUT a second pass: the row count and the partition
+        # values written ride on the write itself via df.observe (one job,
+        # one scan — a pre-write groupBy().count().collect() would execute
+        # the full stage DAG twice, doubling the most expensive jobs at
+        # scale), and the per-file histogram comes from the written parquet
+        # FOOTERS (metadata-only — Iceberg deployments read the same
+        # numbers from snapshot manifests)
         from pyspark.sql import Observation
 
         before_files = self._parquet_files(path)
         obs = Observation(f"{run_id}__{stage}")
-        out = out.observe(obs, F.count(F.lit(1)).alias("row_count"))
+        metrics = [F.count(F.lit(1)).alias("row_count")]
+        if part is not None:
+            # wrapped in a struct: collect_set skips NULL inputs, and a NULL
+            # partition value is a partition too
+            metrics.append(F.collect_set(F.struct(part)).alias("parts"))
+        out = out.observe(obs, *metrics)
 
         writer = out.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        if parts:
+            writer = writer.partitionBy(*parts)
         writer.parquet(path)
 
-        row_count = obs.get["row_count"]
-        hist = self._footer_histogram(self._parquet_files(path) - before_files)
+        observed = obs.get
+        new_files = self._parquet_files(path) - before_files
+        written = None
+        if part is not None:
+            written = sorted((r[0] for r in observed["parts"]),
+                             key=lambda v: (v is None, v))
+        if partitions is not None:
+            declared = set(partitions)
+            undeclared = [v for v in written if v not in declared]
+            if undeclared:
+                self._discard_write(path, new_files, existed)
+                raise ValueError(
+                    f"stage {stage!r} wrote {table!r} rows into undeclared "
+                    f"{part} partitions {undeclared} (declared "
+                    f"{list(partitions)}); the write was undone"
+                )
+        self._save_table_meta(table, parts)
 
         payload = {
             "run_id": run_id,
             "stage": stage,
             "table": table,
-            "row_count": row_count,
-            "partitions": hist,
+            "row_count": observed["row_count"],
+            "partitions": self._footer_histogram(new_files),
             "dedup_scan_partitions": n_pruned,
+            "partitions_written": written,
             "wall_s": round(time.time() - t0, 3),
             "status": "done",
             "ts": time.time(),
@@ -160,45 +200,54 @@ class GraphStore:
         return payload
 
     def _existing_for_dedup(
-        self, path: str, batch, partition_by: list[str] | None
+        self,
+        path: str,
+        batch: DataFrame,
+        dedup_key: list[str],
+        partition_by: list[str],
+        partitions: list | None,
     ) -> tuple[DataFrame, int | None]:
-        """Existing-table read for the keyed upsert's anti-join, PRUNED to
-        the partitions the incoming batch touches. Without this, every
-        incremental write re-reads the whole target table — a full-table
-        scan per append at 100 TB. The partition-value discovery is one
-        extra job over the batch projected to the partition columns
-        (low-cardinality by design: class/rel_type/pred), and the isin
-        predicate reaches the parquet scan as PartitionFilters.
+        """Existing-keys read for the keyed upsert's anti-join: the dedup
+        key and partition columns only, under an explicit schema typed
+        from the batch (no schema-inference job), PRUNED to the declared
+        ``partitions`` — the isin predicate reaches the parquet scan as
+        PartitionFilters, so an incremental write does not re-read the
+        whole target table. Runs no job of its own. Without a declaration
+        the read spans every partition: correct, just unpruned.
 
-        CONTRACT: valid because every dedup key determines its partition
-        columns (node_id = xxhash64(class, key) embeds class; edge and
-        triple keys contain rel_type/pred outright) — a duplicate key can
-        only ever live in a partition the batch also touches.
+        CONTRACT: pruning is valid because every dedup key determines its
+        partition columns (node_id = xxhash64(class, key) embeds class;
+        edge and triple keys contain rel_type/pred outright) — a duplicate
+        key can only live in a partition the batch also touches, and
+        :meth:`write_stage` verifies that the batch stayed inside the
+        declared partitions.
 
-        Returns (dataframe, number of partitions scanned | None if
-        unpartitioned/unprunable)."""
-        existing = self.spark.read.parquet(path)
-        parts = [p for p in (partition_by or []) if p in batch.columns]
-        if not parts:
+        Returns (dataframe, number of declared partitions scanned | None
+        if undeclared)."""
+        cols = list(dict.fromkeys(list(dedup_key) + list(partition_by)))
+        schema = StructType([batch.schema[c] for c in cols])
+        existing = self.spark.read.schema(schema).parquet(path)
+        if partitions is None:
             return existing, None
-        # cap the predicate size: partition columns are low-cardinality by
-        # design (class/rel_type/pred); if a caller partitions on a
-        # high-cardinality key, a thousands-branch OR would bloat the plan
-        # for little pruning benefit — fall back to the full read
-        limit = 256
-        values = batch.select(*parts).distinct().limit(limit + 1).collect()
-        if len(values) > limit:
-            return existing, None
-        pred = None
-        for row in values:
-            conj = None
-            for p in parts:
-                eq = F.col(p).eqNullSafe(F.lit(row[p]))
-                conj = eq if conj is None else conj & eq
-            pred = conj if pred is None else pred | conj
-        if pred is None:  # empty batch: nothing can collide
-            return existing.filter(F.lit(False)), 0
-        return existing.filter(pred), len(values)
+        declared = set(partitions)
+        pred = F.col(partition_by[0]).isin([v for v in declared if v is not None])
+        if None in declared:
+            pred = pred | F.col(partition_by[0]).isNull()
+        return existing.filter(pred), len(declared)
+
+    def _discard_write(self, path: str, files: set[str], existed: bool) -> None:
+        """Undo an append: delete the data files it added (with their
+        checksum siblings) and the partition directories it created."""
+        if not existed:
+            shutil.rmtree(path, ignore_errors=True)
+            return
+        for f in files:
+            d, name = os.path.split(f)
+            for victim in (f, os.path.join(d, f".{name}.crc")):
+                if os.path.exists(victim):
+                    os.remove(victim)
+            if d != path and not os.listdir(d):
+                os.rmdir(d)
 
     @staticmethod
     def _parquet_files(path: str) -> set[str]:
@@ -454,41 +503,42 @@ class GraphStore:
         os.replace(tmp, path)
 
 
+# table -> (partition_by, dedup_key) of the engine's graph tables
+_LAYOUT = {
+    "nodes": (["class"], ["node_id"]),
+    "edges": (["rel_type"], ["src", "rel_type", "dst"]),
+    "triples": (["pred"], ["subj", "pred", "obj"]),
+    "labels": (["extra_label"], ["node_id", "extra_label"]),
+}
+
+
 def write_method_result(
     store: GraphStore,
     res,
     run_id: str,
     method_name: str = "method",
 ) -> dict:
-    """Persist a MethodResult's new_nodes/new_edges batches with per-ACTION
-    provenance: every row carries ``_action`` (the producing action's index
-    from ``res.node_actions``/``res.edge_actions``) so
-    :meth:`GraphStore.rollback_action` can revert a single action — the
-    reference's ``(action)-[:APPLIED]->(Changes)`` discipline without
-    driver-side id lists."""
+    """Persist a MethodResult's new_nodes/new_edges/new_labels batches with
+    per-ACTION provenance: every row carries ``_action`` (the producing
+    action's index from ``res.node_actions``/``edge_actions``/
+    ``label_actions``) so :meth:`GraphStore.rollback_action` can revert a
+    single action — the reference's ``(action)-[:APPLIED]->(Changes)``
+    discipline without driver-side id lists. Each batch declares the one
+    literal class, rel_type or extra label its action recorded."""
     results: dict = {}
-    for j, (df, idx) in enumerate(zip(res.new_nodes, res.node_actions)):
-        stage = f"{method_name}__a{idx}_nodes{j}"
-        results[stage] = store.write_stage(
-            df.withColumn("_action", F.lit(idx)),
-            "nodes", run_id, stage,
-            partition_by=["class"], dedup_key=["node_id"],
-        )
-    for j, (df, idx) in enumerate(zip(res.new_edges, res.edge_actions)):
-        stage = f"{method_name}__a{idx}_edges{j}"
-        results[stage] = store.write_stage(
-            df.withColumn("_action", F.lit(idx)),
-            "edges", run_id, stage,
-            partition_by=["rel_type"], dedup_key=["src", "rel_type", "dst"],
-        )
-    for j, (df, idx) in enumerate(zip(getattr(res, "new_labels", []),
-                                      getattr(res, "label_actions", []))):
-        stage = f"{method_name}__a{idx}_labels{j}"
-        results[stage] = store.write_stage(
-            df.withColumn("_action", F.lit(idx)),
-            "labels", run_id, stage,
-            partition_by=["extra_label"], dedup_key=["node_id", "extra_label"],
-        )
+    for table, dfs, actions, values in (
+        ("nodes", res.new_nodes, res.node_actions, res.node_partitions),
+        ("edges", res.new_edges, res.edge_actions, res.edge_partitions),
+        ("labels", res.new_labels, res.label_actions, res.label_partitions),
+    ):
+        partition_by, dedup_key = _LAYOUT[table]
+        for j, (df, idx, value) in enumerate(zip(dfs, actions, values)):
+            stage = f"{method_name}__a{idx}_{table}{j}"
+            results[stage] = store.write_stage(
+                df.withColumn("_action", F.lit(idx)), table, run_id, stage,
+                partition_by=partition_by, dedup_key=dedup_key,
+                partitions=[value],
+            )
     return results
 
 
@@ -497,19 +547,15 @@ def materialize_kg(
     kg,
     run_id: str,
 ) -> dict:
-    """Write a KGResult's nodes/edges/triples with lineage; resumable —
-    re-invoking with the same run_id skips completed stages."""
+    """Write a KGResult's nodes/edges/triples with lineage, each declaring
+    the partitions ``kg.partitions`` names; resumable — re-invoking with
+    the same run_id skips completed stages."""
     results = {}
-    results["nodes"] = store.write_stage(
-        kg.nodes, "nodes", run_id, "nodes",
-        partition_by=["class"], dedup_key=["node_id"],
-    )
-    results["edges"] = store.write_stage(
-        kg.edges, "edges", run_id, "edges",
-        partition_by=["rel_type"], dedup_key=["src", "rel_type", "dst"],
-    )
-    results["triples"] = store.write_stage(
-        kg.triples, "triples", run_id, "triples",
-        partition_by=["pred"], dedup_key=["subj", "pred", "obj"],
-    )
+    for table in ("nodes", "edges", "triples"):
+        partition_by, dedup_key = _LAYOUT[table]
+        results[table] = store.write_stage(
+            getattr(kg, table), table, run_id, table,
+            partition_by=partition_by, dedup_key=dedup_key,
+            partitions=kg.partitions[table],
+        )
     return results

@@ -40,12 +40,6 @@ def digest(c: Column, hash_fn: str = "xxhash64") -> Column:
     raise ValueError(f"hash_fn must be one of {HASH_FNS}, got {hash_fn!r}")
 
 
-def digest_str(c: Column, hash_fn: str = "xxhash64") -> Column:
-    """:func:`digest` as a string — for signature concatenation sites
-    (concat_ws / array_join need string inputs)."""
-    return digest(c, hash_fn).cast("string")
-
-
 def digest128(c: Column, hash_fn: str = "xxhash64") -> Column:
     """Collision-safe (128-bit) identity key for EXACT dedup at corpus
     scale: md5 natively, or a struct of two independently-salted

@@ -20,11 +20,6 @@ def det_round(col: Column, dp: int) -> Column:
     return F.floor(col * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
 
 
-def det_round_sql(expr: str, dp: int) -> str:
-    scale = float(10**dp)
-    return f"floor(({expr}) * {scale} + 0.5) / {scale}"
-
-
 def sql_double(x: float) -> str:
     """Exact double literal for generated SQL: repr() is the shortest
     round-trip form and the string->double cast parses it back to the

@@ -82,6 +82,23 @@ class MethodResult:
     node_actions: list[int] = field(default_factory=list)
     edge_actions: list[int] = field(default_factory=list)
     label_actions: list[int] = field(default_factory=list)
+    # the literal class / rel_type / extra label of each batch, positionally
+    # aligned: the partition its write declares (materialize.write_method_result)
+    node_partitions: list[str] = field(default_factory=list)
+    edge_partitions: list[str] = field(default_factory=list)
+    label_partitions: list[str] = field(default_factory=list)
+
+    def add_nodes(self, df: DataFrame, cls: str) -> None:
+        self.new_nodes.append(df)
+        self.node_partitions.append(cls)
+
+    def add_edges(self, df: DataFrame, rel_type: str) -> None:
+        self.new_edges.append(df)
+        self.edge_partitions.append(rel_type)
+
+    def add_labels(self, df: DataFrame, label: str) -> None:
+        self.new_labels.append(df)
+        self.label_partitions.append(label)
 
 
 class DerivationMethod:
@@ -569,7 +586,7 @@ class DerivationMethod:
                     F.lit(None).cast("map<string,string>").alias("props"),
                 )
             )
-            res.new_nodes.append(nodes)
+            res.add_nodes(nodes, label)
             return df.withColumn(f"_id_{label}", F.xxhash64(F.lit(label), keyed))
         if t == "assign_label":
             # D5 id-list form (action.py:1300-1337): SET an EXTRA label on
@@ -587,7 +604,7 @@ class DerivationMethod:
                 .distinct()
                 .withColumn("extra_label", F.lit(label))
             )
-            res.new_labels.append(batch)
+            res.add_labels(batch, label)
             return df.withColumn(f"_id_{label}", F.col(id_col))
         if t == "link":
             return self._link(a, res)
@@ -608,14 +625,16 @@ class DerivationMethod:
                     F.lit(None).cast("map<string,string>").alias("props"),
                 ).dropDuplicates(["node_id"])
             )
-            res.new_nodes.append(stat_nodes)
+            res.add_nodes(stat_nodes, label)
+            rel_type = a.get("relationship_type", label)
             for dim_id_col in a.get("link_from", []):
-                res.new_edges.append(
+                res.add_edges(
                     with_uri.select(
                         F.col(dim_id_col).alias("src"),
-                        F.lit(a.get("relationship_type", label)).alias("rel_type"),
+                        F.lit(rel_type).alias("rel_type"),
                         F.xxhash64(F.col("_stat_uri")).alias("dst"),
-                    ).filter(F.col("src").isNotNull()).dropDuplicates()
+                    ).filter(F.col("src").isNotNull()).dropDuplicates(),
+                    rel_type,
                 )
             return with_uri.drop("_stat_uri")
         if t == "branch_save":
@@ -692,19 +711,19 @@ class DerivationMethod:
                 .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
                 .dropDuplicates()
             )
-            res.new_edges.append(edges)
+            res.add_edges(edges, rel_type)
             return df
 
         out = df
         if has_to_lit:
             cls, value = a["to_class"], str(a["to_value"])
-            res.new_nodes.append(_literal_node(cls, value))
+            res.add_nodes(_literal_node(cls, value), cls)
             out = out.withColumn(
                 f"_id_{cls}", F.xxhash64(F.lit(cls), F.lit(value))
             )
         if has_from_lit:
             cls, value = a["from_class"], str(a["from_value"])
-            res.new_nodes.append(_literal_node(cls, value))
+            res.add_nodes(_literal_node(cls, value), cls)
             out = out.withColumn(
                 f"_id_{cls}", F.xxhash64(F.lit(cls), F.lit(value))
             )
@@ -719,7 +738,7 @@ class DerivationMethod:
                 "rel_type",
                 F.xxhash64(F.lit(a["to_class"]), F.col("tv")).alias("dst"),
             )
-            res.new_edges.append(edges)
+            res.add_edges(edges, rel_type)
             return out
 
         src_col = a["from_id"] if has_to_lit else f"_id_{a['from_class']}"
@@ -733,7 +752,7 @@ class DerivationMethod:
             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
             .dropDuplicates()
         )
-        res.new_edges.append(edges)
+        res.add_edges(edges, rel_type)
         return out
 
 

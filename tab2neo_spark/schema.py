@@ -21,7 +21,7 @@ kg/materialize.py):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -102,24 +102,7 @@ def node_uri_col(class_col: Column, *key_cols: Column) -> Column:
     return F.concat_ws(URI_SEP, F.concat(class_col, F.lit("_by")), *key_cols)
 
 
-def node_id_from_uri(uri: Column) -> Column:
-    """64-bit deterministic node id from a URI string (xxhash64, JVM-side)."""
-    return F.xxhash64(uri)
-
-
 def node_id(class_label: str, *key_cols: Column | str) -> Column:
     """``xxhash64(class, key...)`` — replaces Neo4j's ``id(n)``."""
     cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
     return F.xxhash64(F.lit(class_label), *cols)
-
-
-def create_mode_id(class_label: str, row_salt: Column, *key_cols: Column | str) -> Column:
-    """Id for ``create``-mode classes (``Class.create=True`` in the
-    reference, model_appliers/model_applier.py:220-224): duplicates must NOT
-    merge, so the source-row identity is salted into the hash."""
-    cols = [F.col(c) if isinstance(c, str) else c for c in key_cols]
-    return F.xxhash64(F.lit(class_label), row_salt, *cols)
-
-
-def empty_df(spark, schema: T.StructType) -> DataFrame:
-    return spark.createDataFrame([], schema)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from tab2neo_spark.datagen import pages_from_documents
@@ -102,6 +103,107 @@ def test_write_stage_single_job(spark, tmp_path):
     # footer-derived histogram still sums to the observed count
     assert sum(payload["partitions"].values()) == 1000
 
+
+
+def _store_state(store, table):
+    """(rows, every file and directory under the table, checkpoints)."""
+    import os
+
+    path = store.path(table)
+    files = sorted(
+        os.path.relpath(os.path.join(d, f), path)
+        for d, dirs, fs in os.walk(path) for f in fs + dirs
+    )
+    rows = sorted(tuple(r) for r in store.read(table).collect())
+    return rows, files, store.checkpoints()
+
+
+def test_keyed_upsert_with_declared_partitions_runs_at_most_two_jobs(spark, tmp_path):
+    """A keyed upsert into an existing partitioned table costs at most the
+    existing-keys broadcast and the write: no schema-inference job, no
+    job over the batch to discover its partition values, no distinct on
+    the existing keys."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    schema = "node_id long, class string, rdfs_label string"
+    store.write_stage(
+        spark.createDataFrame([(1, "A", "a1"), (2, "A", "a2"), (3, "B", "b1")], schema),
+        "nodes", "r1", "s1", partition_by=["class"], dedup_key=["node_id"],
+    )
+    batch = spark.createDataFrame([(1, "A", "a1"), (4, "A", "a4")], schema)
+    sc = spark.sparkContext
+    sc.setJobGroup("ws_upsert_jobs", "keyed upsert job-count probe")
+    try:
+        payload = store.write_stage(
+            batch, "nodes", "r2", "s2", partition_by=["class"],
+            dedup_key=["node_id"], partitions=["A"],
+        )
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("ws_upsert_jobs")
+    assert len(jobs) <= 2, f"keyed upsert ran {len(jobs)} jobs, expected <= 2"
+    assert payload["row_count"] == 1
+    assert payload["dedup_scan_partitions"] == 1
+    assert payload["partitions_written"] == ["A"]
+    got = {(r["node_id"], r["class"]) for r in store.read("nodes").collect()}
+    assert got == {(1, "A"), (2, "A"), (3, "B"), (4, "A")}
+
+
+def test_undeclared_partition_value_raises_and_undoes_the_write(spark, tmp_path):
+    """The declared partitions are verified on the write: a row landing in
+    an undeclared partition raises, and the table's rows, its file set and
+    the checkpoints are left exactly as before — so the corrected re-run is
+    a real write, not a skipped resume."""
+    import os
+
+    store = GraphStore(spark, str(tmp_path / "g"))
+    schema = "node_id long, class string, rdfs_label string"
+    store.write_stage(
+        spark.createDataFrame([(1, "A", "a1"), (3, "B", "b1")], schema),
+        "nodes", "r1", "s1", partition_by=["class"], dedup_key=["node_id"],
+    )
+    before = _store_state(store, "nodes")
+    batch = spark.createDataFrame([(1, "A", "a1"), (4, "A", "a4"), (5, "C", "c1")], schema)
+    with pytest.raises(ValueError, match=r"undeclared class partitions \['C'\]"):
+        store.write_stage(batch, "nodes", "r2", "s2", partition_by=["class"],
+                          dedup_key=["node_id"], partitions=["A"])
+    assert _store_state(store, "nodes") == before
+    assert not store.stage_done("r2", "s2")
+
+    payload = store.write_stage(batch, "nodes", "r2", "s2", partition_by=["class"],
+                                dedup_key=["node_id"], partitions=["A", "C"])
+    assert payload["row_count"] == 2
+    assert payload["partitions_written"] == ["A", "C"]
+    got = {(r["node_id"], r["class"]) for r in store.read("nodes").collect()}
+    assert got == {(1, "A"), (3, "B"), (4, "A"), (5, "C")}
+
+    # a first write into a fresh table leaves no table behind
+    edges = spark.createDataFrame([(1, "HAS", 2)], "src long, rel_type string, dst long")
+    with pytest.raises(ValueError, match="undeclared rel_type"):
+        store.write_stage(edges, "edges", "r2", "e", partition_by=["rel_type"],
+                          dedup_key=["src", "rel_type", "dst"], partitions=["LINKS"])
+    assert not os.path.exists(store.path("edges"))
+    assert store.table_partitioning("edges") == []
+
+
+@pytest.mark.xfail(strict=True, reason="keyed upsert keeps the first writer; "
+                   "a re-crawl must MERGE (latest warc_ts wins, stale edges go)")
+def test_recrawl_upsert_keeps_latest_crawl(spark, tmp_path):
+    import datetime
+
+    from tab2neo_spark.schema import PAGES_SCHEMA
+
+    t1, t2 = datetime.datetime(2024, 1, 11), datetime.datetime(2024, 3, 5)
+    store = GraphStore(spark, str(tmp_path / "g"))
+    for run_id, ts, html in (("build", t1, b"<p>spark join</p>"),
+                             ("recrawl", t2, b"<p>spark</p>")):
+        pages = spark.createDataFrame([("https://a/1", ts, html, None, "en")], PAGES_SCHEMA)
+        kg = construct_kg(spark, pages, unique_urls=True)
+        materialize_kg(store, kg, run_id=run_id)
+        kg.unpersist()
+    page = store.read("nodes").filter(F.col("class") == "Page").collect()
+    join_id = spark.range(1).select(F.xxhash64(F.lit("Operator"), F.lit("join"))).first()[0]
+    stale = store.read("edges").filter(F.col("dst") == join_id).count()
+    assert ([p["props"]["warc_ts"] for p in page], stale) == (["2024-03-05 00:00:00"], 0)
 
 def test_per_action_rollback(spark, tmp_path):
     """Changes-analog (action.py:1699-1749): revert ONE action's writes

@@ -136,7 +136,7 @@ def test_upsert_anti_join_scan_is_partition_pruned(spark, tmp_path):
     # batch touching ONLY class A: one dup (node 1) + one new row
     batch = spark.createDataFrame([(1, "A", "a1"), (4, "A", "a4")], schema)
     existing, n = store._existing_for_dedup(
-        store.path("nodes"), batch, ["class"]
+        store.path("nodes"), batch, ["node_id"], ["class"], ["A"]
     )
     assert n == 1
     plan = existing._jdf.queryExecution().executedPlan().toString()
@@ -145,7 +145,8 @@ def test_upsert_anti_join_scan_is_partition_pruned(spark, tmp_path):
     assert {r["class"] for r in existing.collect()} == {"A"}
 
     payload = store.write_stage(batch, "nodes", "r2", "s2",
-                                partition_by=["class"], dedup_key=["node_id"])
+                                partition_by=["class"], dedup_key=["node_id"],
+                                partitions=["A"])
     assert payload["dedup_scan_partitions"] == 1
     assert payload["row_count"] == 1  # dup dropped, new row written
     got = {(r["node_id"], r["class"]) for r in store.read("nodes").collect()}
